@@ -1,0 +1,29 @@
+package perfbench
+
+/** Minimal JSON rendering for the result record (no extra dependencies). */
+object Json {
+  def str(s: String): String = s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => render(f.toDouble)
+    case i: Int => i.toString
+    case l: Long => l.toString
+    case o: Option[_] => o.map(render).getOrElse("null")
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+}
