@@ -55,25 +55,24 @@ object CorpusGen {
    * Pattern.compile + Matcher allocation per URL ≈ tens of wasted cpu-s per
    * steady-state generation. Semantics preserved, incl. the regex's
    * leading-zero acceptance ("h007" resolves host 7); indices beyond Int
-   * range classify by magnitude (host ≥ numHosts ⇒ Unreachable, page ≥
-   * pageCount ⇒ NotFound) where the old `.toInt` threw. */
+   * range, of any length, classify by magnitude (host ≥ numHosts ⇒
+   * Unreachable, page ≥ pageCount ⇒ NotFound) where the old `.toInt` threw:
+   * the parsed values saturate at Int.MaxValue. */
   def resolvePage(cfg: CorpusConfig, url: String): PageLookup = {
     if (url != null && url.startsWith("http://h")) {
       val n = url.length
       var i = 8
       var h = 0L
-      var hd = 0
-      while (i < n && hd < 19 && url.charAt(i) >= '0' && url.charAt(i) <= '9') {
-        h = h * 10 + (url.charAt(i) - '0'); i += 1; hd += 1
+      while (i < n && url.charAt(i) >= '0' && url.charAt(i) <= '9') {
+        h = math.min(Int.MaxValue.toLong, h * 10 + (url.charAt(i) - '0')); i += 1
       }
-      if (hd >= 1 && hd < 19 && url.startsWith(".example/p", i)) {
+      if (i > 8 && url.startsWith(".example/p", i)) {
         var j = i + 10
         var p = 0L
-        var pd = 0
-        while (j < n && pd < 19 && url.charAt(j) >= '0' && url.charAt(j) <= '9') {
-          p = p * 10 + (url.charAt(j) - '0'); j += 1; pd += 1
+        while (j < n && url.charAt(j) >= '0' && url.charAt(j) <= '9') {
+          p = math.min(Int.MaxValue.toLong, p * 10 + (url.charAt(j) - '0')); j += 1
         }
-        if (pd >= 1 && pd < 19 && j == n) {
+        if (j > i + 10 && j == n) {
           return if (h < cfg.numHosts) {
             if (p < pageCount(cfg, h.toInt)) PageLookup.Found(h.toInt, p.toInt)
             else PageLookup.NotFound // 404 ⇒ Err(InvalidPage)

@@ -11,9 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * predicates — native expressions stay inside whole-stage codegen where a
  * Scala UDF would force an encoder boundary per row:
  *
- *  - `BloomMightContain`: the seen-set prefilter probe (J1). At 10^10-URL
- *    scale this runs once per candidate URL per generation; the generated
- *    code calls straight into the sketch on the UTF8String bytes with no
+ *  - `BloomMightContain` / `ShardedBloomProbe`: the seen-set prefilter
+ *    probe (J1). At 10^10-URL scale this runs once per candidate URL per
+ *    generation; the generated code calls straight into the sketch with no
  *    boxing/Option allocation.
  *  - `HammingDistance`: SimHash near-dup verification — compiles to
  *    `Long.bitCount(a ^ b)`.
@@ -44,11 +44,12 @@ case class BloomMightContain(child: Expression, sketchBytes: Array[Byte])
 }
 
 /**
- * Sharded-bloom probe over a SPARK BROADCAST — the sketch ships to each
- * executor ONCE via torrent broadcast; the expression itself (and the stage
- * task binary) carries only the broadcast HANDLE. Round 1 embedded the
- * serialized sketch in the plan's reference array, re-shipping it with every
- * stage — fine at MBs, a per-stage tax at north-scale geometries.
+ * Seen-sketch probe over a SPARK BROADCAST snapshot (`ShardedBloom`, bloom
+ * or cuckoo shards) — the sketch ships to each executor ONCE via torrent
+ * broadcast; the expression itself (and the stage task binary) carries only
+ * the broadcast HANDLE. Round 1 embedded the serialized sketch in the plan's
+ * reference array, re-shipping it with every stage — fine at MBs, a
+ * per-stage tax at north-scale geometries.
  */
 case class ShardedBloomProbe(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[ShardedBloom])
@@ -146,7 +147,7 @@ object NativeExpressions {
   def bloomMightContain(c: Column, sketch: BloomSketch): Column =
     toColumn(BloomMightContain(toExpression(c), sketch.serialize()))
 
-  /** Column API for the broadcast sharded-bloom probe. */
+  /** Column API for the broadcast seen-sketch probe. */
   def shardedBloomProbe(c: Column,
       bc: org.apache.spark.broadcast.Broadcast[ShardedBloom]): Column =
     toColumn(ShardedBloomProbe(toExpression(c), bc))

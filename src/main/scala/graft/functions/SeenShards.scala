@@ -11,11 +11,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
  * The unified DISTRIBUTED seen-sketch: one partitioned store for both sketch
  * flavours (north_rule: "partitioned bloom-filter union-merge, with a
  * cuckoo-filter variant for deletions"). Shards live as an
- * `RDD[SeenShard]` hash-partitioned by shard id and are NEVER collected,
- * broadcast, or serialized whole:
+ * `RDD[SeenShard]` hash-partitioned by shard id and are NEVER collected or
+ * serialized whole:
  *
  *  - **probe**: candidate urls route to the partition owning their shard
- *    (zipPartitions) — no filter bytes move, in either direction.
+ *    (zipPartitions) — no filter bytes move, in either direction. (A sketch
+ *    under `sketchBroadcastMaxBytes` is instead read from its checkpoint
+ *    files and broadcast as a `ShardedBloom` snapshot.)
  *  - **update** (insert / cuckoo delete): the url batch routes the same way
  *    into COPIES of the shards (RDD immutability).
  *  - **rebuild**: a shard that degraded (bloom fill past the cap; cuckoo
@@ -165,10 +167,13 @@ object SeenShard {
 
 object ShardStore {
 
-  /** Shard of url u — same routing hash as round 2's ShardedBloom, so
-   * assembled sketches stay compatible with the broadcast compat path. */
+  /** Routing salt — distinct from every in-sketch hashing salt. */
+  private val RouteSalt: Long = 0x5ca4d0L
+
+  /** Shard of url u — shared by the routed store and the broadcast snapshot
+   * (ShardedBloom), so both probe the shard the url was inserted into. */
   @inline def routeOf(u: String, n: Int): Int =
-    Math.floorMod(BloomSketch.hash(u, ShardedBloom.RouteSalt), n.toLong).toInt
+    Math.floorMod(BloomSketch.hash(u, RouteSalt), n.toLong).toInt
 
   private def routed(urls: Dataset[String], n: Int): RDD[(Int, String)] =
     urls.rdd.keyBy(routeOf(_, n)).partitionBy(new HashPartitioner(n))
@@ -345,11 +350,16 @@ object ShardStore {
     }
   }
 
-  /** Driver-side read of all shard files (tests / small-scale inspection
-   * ONLY — the crawl loop never does this). */
+  /** Driver-side read of a generation's shard files (tests / inspection). */
   def readAll(io: TableIO, gen: Int, numShards: Int): Seq[SeenShard] =
+    readDir(io, io.sketchDir(gen), numShards)
+
+  /** Driver-side read of the shard files in `dir`, in shard order; missing
+   * files are skipped. The crawl loop reads its broadcast snapshot this way,
+   * only while the files are under `sketchBroadcastMaxBytes`. */
+  def readDir(io: TableIO, dir: String, numShards: Int): Seq[SeenShard] =
     (0 until numShards).flatMap { i =>
-      val f = s"${io.sketchDir(gen)}/" + f"shard_$i%05d.bin"
+      val f = s"$dir/" + f"shard_$i%05d.bin"
       if (io.fileExists(f)) Some(SeenShard.deserialize(io.readBytes(f)))
       else None
     }

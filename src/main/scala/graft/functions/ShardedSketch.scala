@@ -1,36 +1,27 @@
 package graft.functions
 
 /**
- * Read-side sharded bloom wrapper for the BROADCAST probe path
- * (SeenPrefilter.Bloom + NativeExpressions.shardedBloomProbe): when the
- * sketch is small enough that shipping it once per executor beats routing
- * every candidate row to its shard's partition, a broadcast handle plus the
- * codegen'd probe expression is the faster plan (used by the single-sketch
- * FrontierStep overload, e.g. catalogue q24).
+ * Read-side snapshot of the seen sketch for the BROADCAST probe path
+ * (SeenPrefilter.Bloom + NativeExpressions.shardedBloomProbe), for both
+ * sketch kinds despite the name: the shards, bloom or cuckoo, read once from
+ * their checkpoint
+ * files and shipped once per executor; each candidate probes
+ * `shards(routeOf(url)).maybe(url)` inside whole-stage codegen. When the
+ * sketch is small this beats routing every candidate row to its shard's
+ * partition (the crawl loop's `sketchBroadcastMaxBytes` regime). A snapshot
+ * of shards after a cuckoo delete answers exactly as those shards do.
  *
- * The crawl loop's production seen-sketch does NOT live here — it is the
- * partitioned, never-collected `RDD[SeenShard]` (SeenShards.scala), which
- * also owns construction, union-merge, per-shard growth, deletion and
- * per-shard checkpointing. This class is intentionally probe-only.
+ * The crawl loop's live seen-sketch does NOT live here — it is the
+ * partitioned `RDD[SeenShard]` (SeenShards.scala), which owns construction,
+ * union-merge, per-shard growth, deletion and per-shard checkpointing. This
+ * class is intentionally probe-only.
  */
-final class ShardedBloom(val shards: Array[BloomSketch]) extends Serializable {
+final class ShardedBloom(val shards: Array[SeenShard]) extends Serializable {
 
-  @inline def shardOf(s: String): Int =
-    Math.floorMod(BloomSketch.hash(s, ShardedBloom.RouteSalt), shards.length.toLong).toInt
+  /** Bloom-only snapshot: sketch i is shard i. */
+  def this(blooms: Array[BloomSketch]) =
+    this(blooms.zipWithIndex.map { case (b, i) => BloomSeenShard(i, b, 0L): SeenShard })
 
-  def mightContain(s: String): Boolean = shards(shardOf(s)).mightContain(s)
-
-  def put(s: String): Unit = shards(shardOf(s)).put(s)
-}
-
-object ShardedBloom {
-  /** Routing salt — distinct from every in-sketch hashing salt; shared with
-   * ShardStore.routeOf so broadcast and routed probes agree on shards. */
-  val RouteSalt: Long = 0x5ca4d0L
-
-  def create(numShards: Int, expectedItemsPerShard: Long, fpp: Double): ShardedBloom =
-    new ShardedBloom(Array.fill(numShards)(BloomSketch.create(expectedItemsPerShard, fpp)))
-
-  /** One sketch wrapped as a single-shard partition (compat path). */
-  def single(sketch: BloomSketch): ShardedBloom = new ShardedBloom(Array(sketch))
+  def mightContain(u: String): Boolean =
+    shards(ShardStore.routeOf(u, shards.length)).maybe(u)
 }

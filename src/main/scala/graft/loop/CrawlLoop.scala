@@ -17,8 +17,8 @@ import org.apache.spark.storage.StorageLevel
  *
  *   per generation g: read frontier(g) → FrontierStep.step → write
  *   frontier(g+1) + seen delta(g) + outcomes(g) → route the delta into the
- *   partitioned seen-sketch shards (never collected or broadcast; each
- *   shard checkpoints ITSELF to sketch/gen=g — ShardStore scaladoc) →
+ *   partitioned seen-sketch shards (never collected; each shard
+ *   checkpoints ITSELF to sketch/gen=g — ShardStore scaladoc) →
  *   atomic commit manifest with per-partition lineage and per-stage metrics.
  *
  * The commit fence closes the reference's seen-set race (SURVEY.md §3.2):
@@ -126,20 +126,26 @@ object CrawlLoop {
     // generation they write themselves to sketch/gen=K/shard_I.bin (from
     // inside their partitions) and the next generation re-loads from those
     // files — reliable-checkpoint semantics (executor loss re-reads a file),
-    // no driver collect, no whole-sketch broadcast, no monolithic blob.
+    // no driver collect, no monolithic blob. Only a sketch under
+    // sketchBroadcastMaxBytes is broadcast, read from those files.
     var shards: Option[RDD[SeenShard]] = None
+    // the checkpoint dir `shards` was loaded from: the hybrid probe's
+    // snapshot source (gen=K_retract after a cuckoo retraction, so its
+    // deletes are visible to the broadcast probe)
+    var shardsDir = ""
     // the generation-scoped broadcast of the hybrid probe's SMALL regime
     // (destroyed after each generation; None in the routed regime)
     var genSketchBc: Option[org.apache.spark.broadcast.Broadcast[
       graft.functions.ShardedBloom]] = None
 
-    /** Load gen's shard files; persist + swap, dropping the previous RDD. */
-    def swapInShards(gen: Int): Unit = {
-      val loaded = ShardStore.load(spark, io.sketchDir(gen), shardsN,
-          Some(cfg.seenSketch))
+    /** Load the shard files in `dir`; persist + swap, dropping the previous
+     * RDD. */
+    def swapInShards(dir: String): Unit = {
+      val loaded = ShardStore.load(spark, dir, shardsN, Some(cfg.seenSketch))
         .map(_.persist(StorageLevel.MEMORY_AND_DISK))
       shards.foreach(_.unpersist(blocking = false))
       shards = loaded
+      shardsDir = dir
     }
 
     /** Rebuild the sketch from the committed seen table (derived state) —
@@ -153,7 +159,7 @@ object CrawlLoop {
       val built = ShardStore.build(
         seenSoFar, shardsN, cfg.seenSketch, perShardExpected, cfg.bloomFpp)
       ShardStore.write(built, io.sketchDir(upToGen))
-      swapInShards(upToGen)
+      swapInShards(io.sketchDir(upToGen))
     }
 
     // --- bootstrap or resume -------------------------------------------------
@@ -164,7 +170,7 @@ object CrawlLoop {
           .map(_.group(1).toLong)
           .getOrElse(spark.read.parquet(io.genDir("frontier", g)).count())
         if (useSketch) {
-          swapInShards(g)
+          swapInShards(io.sketchDir(g))
           if (shards.isEmpty) rebuildShardsFromSeen(g)
         }
         g + 1
@@ -200,7 +206,7 @@ object CrawlLoop {
             spark.read.parquet(io.genDir("seen", 0)).select("url").as[String],
             shardsN, cfg.seenSketch, perShardExpected, cfg.bloomFpp)
           ShardStore.write(built, io.sketchDir(0))
-          swapInShards(0)
+          swapInShards(io.sketchDir(0))
         }
         val n = seedDf.count()
         io.commit(0,
@@ -287,18 +293,10 @@ object CrawlLoop {
           // an absent key can evict a colliding present key).
           val retractCkpt = io.sketchDir(gen) + "_retract"
           if (cfg.seenSketch == "cuckoo") shards.foreach { rdd =>
-            val updated = ShardStore.update(rdd,
+            ShardStore.write(ShardStore.update(rdd,
                 allSeen.filter(matchHost(col("url"))).select("url").as[String],
-                delete = true)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            updated.count()
-            ShardStore.write(updated, retractCkpt)
-            val fromFiles = ShardStore.load(spark, retractCkpt, shardsN,
-                Some(cfg.seenSketch))
-              .map(_.persist(StorageLevel.MEMORY_AND_DISK))
-            rdd.unpersist(blocking = false)
-            updated.unpersist(blocking = false)
-            shards = fromFiles.orElse(shards)
+                delete = true), retractCkpt)
+            swapInShards(retractCkpt)
           }
           // (3) swap the staged data into place, then commit and GC: every
           // reader of the old segments (the stage write, the delete-scan,
@@ -313,35 +311,27 @@ object CrawlLoop {
 
       val frontier = spark.read.parquet(io.genDir("frontier", prevGen))
       val seen = spark.read.parquet(io.deltaDirs("seen", prevGen): _*).select("url")
-      // hybrid probe selection (sized by the shard checkpoint files, one FS
-      // listing): a SMALL bloom sketch is assembled once driver-side and
-      // probed through the broadcast codegen'd expression — zero extra
-      // shuffle, no RDD round-trip out of Catalyst; past the threshold (or
-      // for cuckoo, whose probe expression doesn't exist) candidates route
-      // to the shard partitions and no sketch bytes move at all. The files
-      // are current for bloom even across retraction (bloom deletes are
-      // identity), and `shards` was last swapped at prevGen by construction.
-      val prefilter: SeenPrefilter =
-        if (!useSketch) SeenPrefilter.Off
-        else shards match {
-          case None => SeenPrefilter.Off
-          case Some(rdd) =>
-            val bytes =
-              if (cfg.seenSketch == "bloom") io.dirBytes(io.sketchDir(prevGen))
-              else -1L
-            val blooms =
-              if (bytes >= 0 && bytes <= cfg.sketchBroadcastMaxBytes)
-                ShardStore.readAll(io, prevGen, shardsN)
-                  .collect { case b: graft.functions.BloomSeenShard => b }
-              else Nil
-            if (blooms.size == shardsN) {
-              val bc = spark.sparkContext.broadcast(
-                new graft.functions.ShardedBloom(
-                  blooms.sortBy(_.id).map(_.sketch).toArray))
-              genSketchBc = Some(bc)
-              SeenPrefilter.Bloom(bc)
-            } else SeenPrefilter.Sharded(rdd)
-        }
+      // hybrid probe selection (sized by the live shards' checkpoint files,
+      // one FS listing): a SMALL sketch, bloom or cuckoo, is read once
+      // driver-side from the files the live RDD was loaded from and probed
+      // through the broadcast codegen'd expression — zero extra shuffle, no
+      // RDD round-trip out of Catalyst; past the threshold candidates route
+      // to the shard partitions and no sketch bytes move at all.
+      val prefilter: SeenPrefilter = shards match {
+        case None => SeenPrefilter.Off
+        case Some(rdd) =>
+          val bytes = io.dirBytes(shardsDir)
+          val snapshot =
+            if (bytes >= 0 && bytes <= cfg.sketchBroadcastMaxBytes)
+              ShardStore.readDir(io, shardsDir, shardsN)
+            else Nil
+          if (snapshot.size == shardsN) {
+            val bc = spark.sparkContext.broadcast(
+              new graft.functions.ShardedBloom(snapshot.toArray))
+            genSketchBc = Some(bc)
+            SeenPrefilter.Bloom(bc)
+          } else SeenPrefilter.Sharded(rdd)
+      }
 
       // per-generation delay table: static corpus ground truth, or the
       // delayed hosts remembered in the robots cache (Http mode)
@@ -472,7 +462,7 @@ object CrawlLoop {
             // ones' files from the write above are already current
             ShardStore.write(healthy, io.sketchDir(gen), onlyIds = Some(degraded))
           }
-          swapInShards(gen)
+          swapInShards(io.sketchDir(gen))
         }
       }
       // a retraction's sketch checkpoint is dead once sketch_build swapped
@@ -502,7 +492,7 @@ object CrawlLoop {
       def lineage(table: String): String = io.lineageJson(table, gen)
       val prefilterMode = prefilter match {
         case SeenPrefilter.Off        => "off"
-        case _: SeenPrefilter.Bloom   => "bloom_bc"
+        case _: SeenPrefilter.Bloom   => s"${cfg.seenSketch}_bc"
         case _: SeenPrefilter.Sharded => "sharded"
       }
       io.commit(gen,

@@ -60,15 +60,15 @@ final case class CrawlConfig(
     bloomFpp: Double = 0.01,
     useBloomPrefilter: Boolean = true,
     /** Seen-sketch flavour: "bloom" (partitioned, union-merged, per-shard
-     * growable), "cuckoo" (deletion-capable, shards probed in place), or
-     * "none" (every candidate takes the exact anti-join). */
+     * growable), "cuckoo" (deletion-capable), or "none" (every candidate
+     * takes the exact anti-join). */
     seenSketch: String = "bloom",
     /** Hash buckets of the partitioned seen-sketch. */
     sketchShards: Int = 16,
-    /** Hybrid probe switchover: when the bloom sketch's total checkpoint
-     * bytes are at or under this, the loop assembles it ONCE from the shard
-     * files and probes via the broadcast codegen'd expression (zero extra
-     * shuffle, stays inside whole-stage codegen); above it — or for cuckoo —
+    /** Hybrid probe switchover: when the sketch's total checkpoint bytes
+     * (bloom or cuckoo) are at or under this, the loop reads a snapshot ONCE
+     * from the shard files and probes via the broadcast codegen'd expression
+     * (zero extra shuffle, stays inside whole-stage codegen); above it
      * candidates route to the shard partitions (no sketch bytes move). 64 MB
      * default: well under executor/driver headroom, far above any sketch
      * that would make the routed shuffle noticeable. */
@@ -181,7 +181,7 @@ object FrontierStep {
       gen: Int): StepResult =
     step(spark, frontier, seen,
       seenBloom.map(b => SeenPrefilter.Bloom(
-          spark.sparkContext.broadcast(graft.functions.ShardedBloom.single(b))))
+          spark.sparkContext.broadcast(new graft.functions.ShardedBloom(Array(b)))))
         .getOrElse(SeenPrefilter.Off),
       docs, cfg, gen)
 
@@ -487,18 +487,24 @@ object FrontierStep {
     val allowed = robotsFiltered.observe(obsAllowed, count(lit(1)).as("n"))
 
     // --- J1: cull_known — sketch-prefiltered exact anti-join ------------------
-    // "maybe seen" rows take the exact LEFT ANTI join; "definitely new" rows
-    // skip it (a sketch FP costs a probe, never a URL — SURVEY §7.3).
+    // One LEFT ANTI join keyed on the url, with the sketch's "maybe seen" tag
+    // in its condition: only a maybe-seen row can be culled, and the sketch
+    // has no false negatives, so no URL is lost (SURVEY §7.3). Every row
+    // still takes the join's key lookup and, when `seen` is too large to
+    // broadcast, its exchange; keyed on the url, the rows stay evenly spread
+    // over that exchange. Not split into a
+    // definitely-new half and a maybe-seen half: uncached, the candidates
+    // would be computed once per half (link extraction and the dedup
+    // exchange included); cached, their plan would nest in every write's
+    // plan, which the SQL status store retains. The tagged rows are read
+    // once, so the routed probe's RDD round trip runs once.
     val discoveredUrls = prefilter match {
       case SeenPrefilter.Off =>
         allowed.join(seen, Seq("url"), "left_anti")
       case pf if cfg.useBloomPrefilter =>
-        val tagged = pf.tag(allowed).persist()
-        persistedFrames += tagged
-        val definitelyNew = tagged.filter(!col("_maybe")).drop("_maybe")
-        val maybeSeen = tagged.filter(col("_maybe")).drop("_maybe")
-        definitelyNew.unionByName(
-          maybeSeen.join(seen, Seq("url"), "left_anti"))
+        val tagged = pf.tag(allowed)
+        tagged.join(seen, tagged("url") === seen("url") && tagged("_maybe"), "left_anti")
+          .drop("_maybe")
       case _ =>
         allowed.join(seen, Seq("url"), "left_anti")
     }

@@ -27,16 +27,21 @@ object SeenPrefilter {
     def tag(allowed: DataFrame): DataFrame = allowed.withColumn("_maybe", lit(true))
   }
 
-  /** Partitioned bloom, broadcast once per executor; the probe is a native
-   * codegen'd expression (no per-row boxing, no per-stage sketch shipping). */
+  /** Broadcast snapshot of the shards — bloom or cuckoo, despite the name —
+   * shipped once per executor; the probe is a native codegen'd expression
+   * (no per-row boxing, no per-stage sketch shipping, no exchange). The
+   * crawl loop takes it while the sketch is at or under
+   * `CrawlConfig.sketchBroadcastMaxBytes`. */
   final case class Bloom(bc: Broadcast[ShardedBloom]) extends SeenPrefilter {
     def tag(allowed: DataFrame): DataFrame =
       allowed.withColumn("_maybe", NativeExpressions.shardedBloomProbe(col("url"), bc))
   }
 
-  /** The unified distributed sketch (bloom or cuckoo `SeenShard`s, crawl-loop
-   * production path): candidates route to the partition owning their shard —
-   * no sketch bytes ever move, in either direction (ShardStore scaladoc). */
+  /** The routed probe over the distributed sketch (bloom or cuckoo
+   * `SeenShard`s), the crawl loop's path once the sketch is past
+   * `sketchBroadcastMaxBytes`: candidates route to the partition owning their
+   * shard — no sketch bytes ever move, in either direction (ShardStore
+   * scaladoc). An RDD round trip out of Catalyst. */
   final case class Sharded(shards: RDD[graft.functions.SeenShard]) extends SeenPrefilter {
     def tag(allowed: DataFrame): DataFrame = {
       val spark = allowed.sparkSession

@@ -64,6 +64,22 @@ class CorpusSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
+  test("resolvePage classifies indices of any length by magnitude") {
+    import CorpusGen.PageLookup.{Found, NotFound, Unreachable}
+    def at(u: String) = CorpusGen.resolvePage(cfg, u)
+    assert(at("http://h3.example/p1") == Found(3, 1))
+    assert(at("http://h" + "0" * 21 + "3.example/p1") == Found(3, 1)) // leading zeros
+    // host index past numHosts ⇒ Unreachable, whatever its length
+    for (d <- Seq(18, 19, 20, 40))
+      assert(at("http://h" + "9" * d + ".example/p1") == Unreachable, s"$d-digit host")
+    assert(at("http://h" + "9" * 40 + ".example/p" + "9" * 40) == Unreachable)
+    // page index past pageCount ⇒ NotFound, whatever its length
+    assert(at("http://h3.example/p" + "9" * 40) == NotFound)
+    // no digits ⇒ not a corpus url
+    assert(at("http://h.example/p1") == NotFound)
+    assert(at("http://h3.example/p") == NotFound)
+  }
+
   test("zipf host sizes and deterministic seeds") {
     assert(CorpusGen.pageCount(cfg, 0) == 40)
     assert(CorpusGen.pageCount(cfg, 1) == 20)

@@ -31,6 +31,12 @@ class GoldenCrawlSpec extends AnyFunSuite {
     (engineGen, engineOutcomes, oracle)
   }
 
+  /** The seen-probe regime each crawled generation's manifest records. */
+  private def prefilters(io: TableIO) = io.committedGens().filter(_ > 0)
+    .map(g => io.readManifest(g)).map { m =>
+      """"prefilter":"([a-z_]+)"""".r.findFirstMatchIn(m).map(_.group(1)).orNull
+    }
+
   test("golden crawl: seen-set, generation map, and outcomes match the oracle") {
     val cfg = CrawlConfig(corpus = CorpusConfig(seed = 42L, numHosts = 15, maxPages = 30),
       perHostCap = 3)
@@ -189,6 +195,18 @@ class GoldenCrawlSpec extends AnyFunSuite {
       .groupBy(_._2).map { case (u, os) => u -> os.map(_._1).toSet }
     assert(h2Fetches.exists { case (_, gens) => gens.exists(_ <= 4) && gens.exists(_ > 4) },
       "no h2 URL was re-fetched after retraction")
+    // the tiny cuckoo sketch took the broadcast regime in every generation —
+    // in the retraction generation a snapshot of the post-delete checkpoint
+    val bcModes = prefilters(lastIo)
+    assert(bcModes.nonEmpty && bcModes.forall(_ == "cuckoo_bc"),
+      s"expected the broadcast cuckoo regime under the threshold, manifests say: $bcModes")
+    // the routed regime (threshold 0) reaches the same crawl
+    val (genRt, outRt, _) = runBoth(cfg.copy(sketchBroadcastMaxBytes = 0L), seeds, maxGens = 20)
+    val rtModes = prefilters(lastIo)
+    assert(rtModes.nonEmpty && rtModes.forall(_ == "sharded"),
+      s"expected the routed regime at threshold 0, manifests say: $rtModes")
+    assert(genRt == engineGen)
+    assert(outRt == engineOutcomes)
     // bloom mode (no deletion; stale bits are FPs only) reaches the same crawl
     val (genBl, outBl, _) = runBoth(cfg.copy(seenSketch = "bloom"), seeds, maxGens = 20)
     assert(genBl == engineGen)
@@ -756,17 +774,13 @@ class GoldenCrawlSpec extends AnyFunSuite {
   test("hybrid seen-probe: broadcast and routed regimes are crawl-identical, switchover pinned") {
     // the loop sizes the sketch from its checkpoint files each generation:
     // under the threshold it assembles a broadcast ShardedBloom and probes
-    // through the codegen'd expression (no extra shuffle); over it (or for
-    // cuckoo) candidates route to the shard partitions. Both regimes must
+    // through the codegen'd expression (no extra shuffle); over it
+    // candidates route to the shard partitions. Both regimes must
     // crawl identically, and the manifests must record which ran.
     val base = CrawlConfig(corpus = CorpusConfig(seed = 42L, numHosts = 12, maxPages = 24),
       perHostCap = 3, fetchMode = graft.operators.FetchMode.Generator)
     val seeds = CorpusGen.seeds(base.corpus, 3)
     val (genBc, outBc, oracle) = runBoth(base, seeds, maxGens = 12) // tiny sketch ⇒ broadcast regime
-    def prefilters(io: TableIO) = io.committedGens().filter(_ > 0)
-      .map(g => io.readManifest(g)).map { m =>
-        """"prefilter":"([a-z_]+)"""".r.findFirstMatchIn(m).map(_.group(1)).orNull
-      }
     val bcModes = prefilters(lastIo)
     assert(bcModes.nonEmpty && bcModes.forall(_ == "bloom_bc"),
       s"expected broadcast regime under the threshold, manifests say: $bcModes")

@@ -37,6 +37,44 @@ class NativeExpressionsSpec extends AnyFunSuite {
     assert(expr.eval(null) == true)
   }
 
+  test("ShardedBloomProbe over cuckoo shards: no false negatives via codegen and eval; " +
+      "a snapshot read after deletes answers as the live shards do") {
+    val s = spark
+    import s.implicits._
+    import graft.functions.{ShardStore, ShardedBloom, ShardedBloomProbe}
+    def url(i: Long) = s"http://h$i.example/p$i"
+    val in = (0L until 4000L).map(url)
+    val victims = (0L until 4000L by 8).map(url)
+    val live = ShardStore.update(
+        ShardStore.build(in.toDS(), 8, "cuckoo", 1024, 0.01), victims.toDS(), delete = true)
+      .persist()
+    // the snapshot is read from the post-delete checkpoint files, as the loop does
+    val dir = java.nio.file.Files.createTempDirectory("graft-snapshot").toString
+    ShardStore.write(live, dir)
+    val bc = spark.sparkContext.broadcast(
+      new ShardedBloom(ShardStore.readDir(new graft.plans.TableIO(dir), dir, 8).toArray))
+    val all = (0L until 8000L).map(url)
+    val want = ShardStore.probe(all.map(u => (u, "h")).toDS(), live).collect()
+      .map(t => t._1 -> t._3).toMap
+    // range source: a local Seq would be constant-folded through eval
+    val df = spark.range(8000)
+      .withColumn("url", concat(lit("http://h"), col("id"), lit(".example/p"), col("id")))
+      .select(col("url"), NativeExpressions.shardedBloomProbe(col("url"), bc).as("maybe"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("sharded_bloom_probe") && plan.contains("*(1)"), plan)
+    val got = df.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(got == want, "snapshot probe disagrees with the live shards")
+    assert((in.toSet -- victims).forall(got(_)), "false negative through codegen")
+    assert(victims.count(got(_)) < victims.size / 10, "deletes not visible in the snapshot")
+    // interpreted (eval) path agrees too
+    (0L until 8000L by 7).map(url).foreach { u =>
+      assert(ShardedBloomProbe(
+        org.apache.spark.sql.catalyst.expressions.Literal(u), bc).eval(null) == want(u), u)
+    }
+    live.unpersist()
+    bc.destroy()
+  }
+
   test("HammingDistance matches the pure function") {
     val s = spark
     import s.implicits._

@@ -87,32 +87,13 @@ class PolitenessSpec extends AnyFunSuite {
       assert(w.partitionSpec.forall(_.references.nonEmpty),
         s"window partitions by a computed predicate (loser-sort shape): ${w.partitionSpec}")
     }
-    // host-only windows come in two bounded flavours now (r6): the stage-2
-    // row_number rank (input bounded by the _rn1 ≤ salt·k survivor filter)
-    // and the priority-boundary running sum (input = the per-(host, priority)
-    // aggregate — one row per DISTINCT priority of a host, never one per
-    // row). Anything else partitioned by host alone would be a hot-host sort.
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAggregate}
-    val hostOnly = windows.filter(_.partitionSpec.size == 1)
-    assert(hostOnly.nonEmpty, "expected host-only windows")
-    hostOnly.foreach { w =>
-      val isRank = w.windowExpressions.exists(_.collectFirst {
-        case _: org.apache.spark.sql.catalyst.expressions.RowNumber => () }.isDefined)
-      if (isRank) {
-        val bounded = w.child.collect {
-          case f: LFilter if f.condition.references.map(_.name).exists(_ == "_rn1") => f
-        }
-        assert(bounded.nonEmpty,
-          "stage-2 rank window is not fed by a _rn1 survivor filter — its input is unbounded per host")
-      } else {
-        val aggFed = w.child.collect {
-          case a: LAggregate if a.groupingExpressions.size >= 2 => a
-        }
-        assert(aggFed.nonEmpty,
-          "host-only non-rank window is not fed by the (host, priority) aggregate — " +
-          s"its input is unbounded per host: ${w.windowExpressions}")
-      }
+    val stage2 = windows.filter(_.partitionSpec.size == 1)
+    assert(stage2.size == 1, s"expected one host-only window, got ${stage2.map(_.partitionSpec)}")
+    val bounded = stage2.head.child.collect {
+      case f: LFilter if f.condition.references.map(_.name).exists(_ == "_rn1") => f
     }
+    assert(bounded.nonEmpty,
+      "stage-2 window is not fed by a _rn1 survivor filter — its input is unbounded per host")
   }
 
   test("hot-host (Zipf head) selection == brute force, losers unselected") {
